@@ -1,12 +1,11 @@
 #!/usr/bin/env python
 """Round-8 optimization measurement harness (guide §1).
 
-Separate from the FROZEN bench.py: this file isolates the expensive
-paths with noop sinks, splits walls by stage, and dumps
-``.explain("formatted")`` plans to plans/r08/.  Usage:
+Separate from the FROZEN bench.py: this file times single queries with
+noop sinks, dumps ``.explain("formatted")`` plans to plans/r08/ and
+profiles the inference UDF body.  Per-stage walls of the flagship and the
+fold's phases come from ``python perfbench/run.py --trace 1``.  Usage:
 
-    python bench_extra.py stages     # kg pipeline stage split
-    python bench_extra.py fold       # incremental_fold breakdown
     python bench_extra.py queries q1_pricing_summary dup_clusters ...
     python bench_extra.py plans [names...]   # dump explain(formatted)
     python bench_extra.py profile    # cProfile of the inference UDF body
@@ -47,77 +46,6 @@ def timed(fn, warm: int = 1, reps: int = 2) -> list[float]:
     return walls
 
 
-def section_stages(spark) -> None:
-    """Split the flagship wall: scan -> candidates (JVM) vs + inference
-    (Arrow UDF).  Guide §1.1 first-principles: which side owns the
-    time decides whether kernel work or plan work pays."""
-    from relation_extraction_transformer_spark.plans import pipeline as PL
-
-    bench.ensure_pages(spark, N_PAGES_KG, PAGES_PATH_KG)
-    pages = spark.read.parquet(PAGES_PATH_KG)
-    arts = PL.build_artifacts(spark, PL.DEFAULT_PIPELINE)
-
-    spark.sparkContext.setJobDescription("stage: candidates only")
-    cand = lambda: noop(
-        PL.candidates_plan(pages, arts, PL.DEFAULT_PIPELINE).select(
-            "url", "sent_id", "pair_id", "subj_surface", "subj_type",
-            "obj_surface", "obj_type", "masked_tokens", "pos_ids",
-            "ner_ids", "subj_positions", "obj_positions",
-        )
-    )
-    spark.sparkContext.setJobDescription("stage: full triples")
-    full = lambda: noop(PL.triples_plan(pages, spark, keep_probs=False))
-    n_cand = PL.candidates_plan(pages, arts, PL.DEFAULT_PIPELINE).count()
-    out = {
-        "pages": N_PAGES_KG,
-        "n_candidates": n_cand,
-        "candidates_only_sec": timed(cand),
-        "full_triples_sec": timed(full),
-    }
-    print(json.dumps({"stages": out}))
-
-
-def section_fold(spark) -> None:
-    """incremental_fold breakdown: is the fold paying for the delta
-    extraction once or twice (stats + regs are two write actions)?"""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from relation_extraction_transformer_spark.operators import (
-        incremental as INC,
-    )
-
-    bench.ensure_pages(spark, N_PAGES_KG, PAGES_PATH_KG)
-    pages = spark.read.parquet(PAGES_PATH_KG)
-    parity = F.crc32("url") % 2
-    day1, day2 = pages.where(parity == 0), pages.where(parity == 1)
-
-    state_dir = tempfile.mkdtemp(prefix="ret_bx_state_")
-    try:
-        t0 = time.perf_counter()
-        INC.fold_pages_delta(spark, day1, state_dir)
-        boot = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        s = INC.fold_pages_delta(spark, day2, state_dir)
-        fold = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        noop(
-            INC.edge_report(
-                INC.read_edge_state(
-                    spark, f"{state_dir}/v{s['state_version']}"
-                )
-            )
-        )
-        report = round(time.perf_counter() - t0, 3)
-        print(json.dumps({"fold": {
-            "bootstrap_sec": boot, "fold_sec": fold, "report_sec": report,
-        }}))
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-
-
 def section_queries(spark, names: list[str]) -> None:
     import __spark_entry__ as entry
 
@@ -156,69 +84,32 @@ def section_plans(spark, names: list[str]) -> None:
 
 
 def section_profile(spark) -> None:
-    """cProfile the inference UDF body on driver-collected batches: the
-    per-task Python cost split (pandas overhead vs kernel GEMMs)."""
+    """cProfile the inference UDF body (``infer_batch``, the function
+    ``mapInPandas`` runs) on driver-collected batches: the per-task Python
+    cost split (pandas overhead vs kernel GEMMs)."""
     import cProfile
     import io
     import pstats
 
-    import pandas as pd
-
+    from relation_extraction_transformer_spark.operators import (
+        inference as INF,
+    )
     from relation_extraction_transformer_spark.plans import pipeline as PL
 
     bench.ensure_pages(spark, N_PAGES_KG, PAGES_PATH_KG)
     pages = spark.read.parquet(PAGES_PATH_KG).limit(2000)
-    arts = PL.build_artifacts(spark, PL.DEFAULT_PIPELINE)
-    feats = PL.candidates_plan(pages, arts, PL.DEFAULT_PIPELINE).select(
-        "url", "sent_id", "pair_id", "subj_surface", "subj_type",
-        "obj_surface", "obj_type", "masked_tokens", "pos_ids",
-        "ner_ids", "subj_positions", "obj_positions",
-    )
-    pdf = feats.toPandas()
+    arts = PL.build_artifacts(spark)
+    pdf = PL.candidates_plan(pages).select(*PL.SLIM_COLS).toPandas()
     print(f"profiling over {len(pdf)} candidates")
-    from relation_extraction_transformer_spark.operators import (
-        inference as INF,
-    )
-    from relation_extraction_transformer_spark import constants as C  # noqa
-
     cfg = PL.DEFAULT_PIPELINE.model
+    params, vocab = arts.params_bc.value, arts.vocab_bc.value
 
-    class FakeBC:
-        def __init__(self, v):
-            self.value = v
-
-    params = PL.build_artifacts(spark, PL.DEFAULT_PIPELINE)
-    predict = INF.predict_relations  # not used directly; reuse run body
-
-    # replicate the UDF body: batches of 1024 like the session config
-    batches = [
-        pdf.iloc[i:i + 1024] for i in range(0, len(pdf), 1024)
-    ]
+    # batches of 1024 like the session's arrow.maxRecordsPerBatch
+    batches = [pdf.iloc[i:i + 1024] for i in range(0, len(pdf), 1024)]
 
     def run_all():
-        import numpy as np
-
-        vocab = params.vocab_bc.value
-        pb = params.params_bc.value
         for b in batches:
-            word_ids = INF.tokens_to_word_ids(b["masked_tokens"], vocab)
-            b2 = b.assign(word_ids=word_ids)
-            lengths = b2["word_ids"].map(len).to_numpy()
-            for l in np.unique(lengths):
-                idx = np.nonzero(lengths == l)[0]
-                if l == 0 or l > 96:
-                    continue
-                stack = lambda col: np.array(
-                    [np.asarray(v, dtype=np.int64) for v in b2[col].iloc[idx]]
-                )
-                from relation_extraction_transformer_spark.kernel import (
-                    forward_batch,
-                )
-                forward_batch(
-                    pb, cfg,
-                    stack("word_ids"), stack("pos_ids"), stack("ner_ids"),
-                    stack("subj_positions"), stack("obj_positions"),
-                )
+            INF.infer_batch(b, params, cfg, vocab, keep_probs=False)
 
     run_all()  # warm
     t0 = time.perf_counter()
@@ -236,14 +127,10 @@ def section_profile(spark) -> None:
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "stages"
+    mode = sys.argv[1] if len(sys.argv) > 1 else "profile"
     spark = make_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    if mode == "stages":
-        section_stages(spark)
-    elif mode == "fold":
-        section_fold(spark)
-    elif mode == "queries":
+    if mode == "queries":
         section_queries(spark, sys.argv[2:])
     elif mode == "plans":
         section_plans(spark, sys.argv[2:])

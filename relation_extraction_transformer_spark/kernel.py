@@ -6,9 +6,8 @@ batch of SAME-LENGTH examples.  Same-length batching is a deliberate
 semantic choice: the reference pads per batch, and several of its operators
 (diagonal-stripe attention geometry, max-pool over time) depend on the
 padded length, making its outputs batch-composition-dependent.  Grouping by
-exact length removes padding entirely, so results are independent of batch
-composition, partitioning, and parallelism — a hard requirement for a
-deterministic distributed engine.
+exact length removes padding entirely, so no output depends on a padded
+length.
 
 Eval-mode simplifications (ref:relation_model.py:96, eval.py:82):
 - all dropouts are identity
@@ -17,12 +16,13 @@ Eval-mode simplifications (ref:relation_model.py:96, eval.py:82):
 
 Arithmetic dtype follows the parameter arrays (float64 for the oracle,
 float32 on the pipeline hot path — see PipelineConfig.inference_dtype; the
-end-to-end test pins fp32-vs-fp64 triple equality).  Results are
-batch-invariant up to BLAS GEMM
-blocking noise (the stacked-matrix height changes dgemm's summation order,
-perturbing the last float bit); predictions (argmax) are stable, and parity
-tests compare probs at rtol 1e-9.  Pin BLAS to one thread per Spark task
-(OMP_NUM_THREADS=1) — parallelism comes from partitions, not BLAS.
+end-to-end test pins fp32-vs-fp64 triple equality).  Results are NOT yet
+bit-independent of batch size: the stacked-matrix height changes the GEMM
+summation order, and fp32 probs were measured to drift by 2e-8..2e-7
+between batch sizes (OpenBLAS 0.3.23 on a 4-core AMD EPYC host; see
+ROADMAP.md, "Batch-invariant inference").  Parity tests compare probs at
+rtol 1e-9.  Pin BLAS to one thread per Spark task (OMP_NUM_THREADS=1) —
+parallelism comes from partitions, not BLAS.
 """
 
 from __future__ import annotations
@@ -43,8 +43,9 @@ def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
 def _linear(x: np.ndarray, p: Params, name: str) -> np.ndarray:
     # For stacked inputs (B, l, d), np.matmul dispatches B separate
     # skinny (l, d) GEMMs; flattening to one (B*l, d) GEMM is ~1.5x
-    # faster (measured, r8) and bit-identical — every output row is the
-    # same row-by-matrix product either way, only the call count changes.
+    # faster (measured, r8).  Each output row is the same row-by-matrix
+    # product either way, but BLAS may block a taller matrix differently,
+    # so the last bits can change with B (see the module docstring).
     w, b = p[f"{name}_w"], p[f"{name}_b"]
     if x.ndim > 2:
         flat = x.reshape(-1, x.shape[-1])
@@ -203,7 +204,7 @@ def lstm_forward(
         c = np.zeros((B, H), dtype=out.dtype)
         # hoist the input projection out of the time loop (one GEMM);
         # flatten (B, l, d) -> (B*l, d) so it IS one GEMM, not B skinny
-        # ones (bit-identical, see _linear)
+        # ones (see _linear)
         xg = (
             out.reshape(-1, d) @ w_ih.T + bias
         ).reshape(B, l, -1)                 # (B, l, 4H)

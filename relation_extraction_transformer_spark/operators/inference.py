@@ -39,9 +39,10 @@ FEATURE_COLS = (
 def as_dtype(params: dict, dtype) -> dict:
     """Cast every float parameter array once (e.g. float32 for inference:
     halves the GEMM memory traffic, which is the multi-core scaling
-    limiter on bandwidth-bound hosts).  Int arrays pass through."""
+    limiter on bandwidth-bound hosts).  Int arrays, and arrays already of
+    ``dtype``, pass through uncopied."""
     return {
-        k: (v.astype(dtype) if np.issubdtype(v.dtype, np.floating) else v)
+        k: v.astype(dtype, copy=False) if np.issubdtype(v.dtype, np.floating) else v
         for k, v in params.items()
     }
 
@@ -63,6 +64,64 @@ def tokens_to_word_ids(tokens: pd.Series, vocab: dict) -> list:
     return np.split(flat_ids, np.cumsum(lens)[:-1]) if len(tokens) else []
 
 
+def length_groups(pdf: pd.DataFrame, vocab: dict | None = None) -> Iterator[tuple]:
+    """Yield ``(idx, word_ids, pos_ids, ner_ids, subj_positions,
+    obj_positions)`` for each exact-length group of a pandas batch, in
+    ascending length order: ``idx`` holds the group's row positions and
+    the rest are stacked ``(len(idx), l)`` int64 arrays, ready for the
+    kernel.  Lengths outside ``1..ABS_MAX_LEN`` yield nothing.
+    ``word_ids`` is looked up from ``masked_tokens`` in ``vocab`` when the
+    batch does not carry it.
+
+    Grouping by exact length removes padding, so a row's output does not
+    depend on which other rows share its group — up to BLAS summation
+    order, which varies with the group's row count (fp32 probs drift by
+    2e-8..2e-7 across batch sizes, measured with OpenBLAS 0.3.23 on a
+    4-core AMD EPYC host; see ROADMAP.md, "Batch-invariant inference")."""
+    if "word_ids" not in pdf.columns:
+        pdf = pdf.assign(word_ids=tokens_to_word_ids(pdf["masked_tokens"], vocab))
+    lengths = pdf["word_ids"].map(len).to_numpy()
+    for l in np.unique(lengths):
+        if l == 0 or l > C.ABS_MAX_LEN:
+            continue
+        idx = np.nonzero(lengths == l)[0]
+        yield (idx,) + tuple(
+            np.array([np.asarray(v, dtype=np.int64) for v in pdf[col].iloc[idx]])
+            for col in ("word_ids", "pos_ids", "ner_ids",
+                        "subj_positions", "obj_positions")
+        )
+
+
+def infer_batch(
+    pdf: pd.DataFrame,
+    params: dict,
+    cfg: ModelConfig,
+    vocab: dict | None = None,
+    keep_probs: bool = True,
+) -> pd.DataFrame:
+    """The inference UDF body on one pandas batch: the passthrough columns
+    (all but FEATURE_COLS) in order, then ``pred``, ``prob`` and, with
+    ``keep_probs``, ``probs``.  Rows outside ``1..ABS_MAX_LEN`` are
+    null-class by definition (upstream should have filtered them, P14
+    analog): pred 0 with prob 1."""
+    n = len(pdf)
+    preds = np.zeros(n, dtype=np.int32)
+    top = np.ones(n, dtype=np.float64)
+    probs = np.zeros((n, cfg.num_class))
+    probs[:, 0] = 1.0
+    for idx, *stacks in length_groups(pdf, vocab):
+        p, pr = forward_batch(params, cfg, *stacks)
+        preds[idx] = p
+        top[idx] = pr[np.arange(len(idx)), p]
+        probs[idx] = pr
+    out = pdf[[c for c in pdf.columns if c not in FEATURE_COLS]].copy()
+    out["pred"] = preds
+    out["prob"] = top
+    if keep_probs:
+        out["probs"] = probs.tolist()
+    return out
+
+
 def predict_relations(
     candidates: DataFrame,
     params_bc: Broadcast,
@@ -72,12 +131,10 @@ def predict_relations(
 ) -> DataFrame:
     """Append ``pred`` (label id), ``pred_label``, ``prob`` (argmax prob)
     and optionally ``probs`` (42 floats) to a preprocessed candidates
-    DataFrame.
-
-    Same-length grouping inside each Arrow batch makes results independent
-    of batch composition and partitioning (see kernel.py docstring); row
-    order within each batch is preserved, and all passthrough columns are
-    carried, so no positional alignment is needed downstream
+    DataFrame: one :func:`infer_batch` per Arrow batch (see
+    :func:`length_groups` for how far a row's output depends on its
+    batch).  Row order within each batch is preserved, and all passthrough
+    columns are carried, so no positional alignment is needed downstream
     (replaces the reference's sort/unsort dance,
     ref:model/relation_model.py:102-103).
     """
@@ -92,62 +149,15 @@ def predict_relations(
         out_fields.append(
             T.StructField("probs", T.ArrayType(T.DoubleType(), False), False)
         )
-    schema = T.StructType(out_fields)
-    pass_names = [f.name for f in passthrough]
-
-    has_word_ids = "word_ids" in candidates.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         params = params_bc.value  # one unpickle per worker, cached by Spark
         vocab = vocab_bc.value if vocab_bc is not None else None
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            if not has_word_ids:
-                pdf = pdf.assign(
-                    word_ids=tokens_to_word_ids(pdf["masked_tokens"], vocab)
-                )
-            preds = np.zeros(n, dtype=np.int32)
-            top = np.zeros(n, dtype=np.float64)
-            probs_out: list | None = [None] * n if keep_probs else None
+            if len(pdf):
+                yield infer_batch(pdf, params, cfg, vocab, keep_probs)
 
-            lengths = pdf["word_ids"].map(len).to_numpy()
-            for l in np.unique(lengths):
-                idx = np.nonzero(lengths == l)[0]
-                if l == 0 or l > C.ABS_MAX_LEN:
-                    # out-of-range sentences are null-class by definition;
-                    # upstream should have filtered them (P14 analog)
-                    preds[idx] = 0
-                    if probs_out is not None:
-                        z = np.zeros(cfg.num_class)
-                        z[0] = 1.0
-                        for i in idx:
-                            probs_out[i] = z.tolist()
-                    top[idx] = 1.0
-                    continue
-                stack = lambda col: np.array(
-                    [np.asarray(v, dtype=np.int64) for v in pdf[col].iloc[idx]]
-                )
-                p, pr = forward_batch(
-                    params, cfg,
-                    stack("word_ids"), stack("pos_ids"), stack("ner_ids"),
-                    stack("subj_positions"), stack("obj_positions"),
-                )
-                preds[idx] = p
-                top[idx] = pr[np.arange(len(idx)), p]
-                if probs_out is not None:
-                    for k, i in enumerate(idx):
-                        probs_out[i] = pr[k].tolist()
-
-            out = pdf[pass_names].copy()
-            out["pred"] = preds
-            out["prob"] = top
-            if probs_out is not None:
-                out["probs"] = probs_out
-            yield out
-
-    result = candidates.mapInPandas(run, schema=schema)
+    result = candidates.mapInPandas(run, schema=T.StructType(out_fields))
     return result.withColumn("pred_label", id_to_label(F.col("pred")))
 
 

@@ -25,7 +25,9 @@ from . import ner as N
 
 
 def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
-    """pairs (from candidates.generate_pairs) -> model feature columns."""
+    """pairs (from candidates.generate_pairs over a frame that already
+    carries :func:`attach_tag_ids`' per-sentence ``pos_ids``/``ner_ids``)
+    -> model feature columns."""
     # every feature expression below references plain column names, so
     # the whole set is memoized per (lower,) — construction is ~0.4 s
     # of py4j roundtrips otherwise rebuilt per plan (r8, exprcache)
@@ -45,10 +47,6 @@ def preprocess_candidates(pairs: DataFrame, lower: bool = False) -> DataFrame:
         XC.cached_column(("preprocess_masked", lower), _masked),
     )
     n = F.size("masked_tokens")
-    if "pos_ids" not in df.columns:
-        # tag ids are per-sentence; computing them upstream of the pair
-        # explode avoids recomputing per candidate — this is the fallback
-        df = attach_tag_ids(df)
     df = df.withColumn(
         "subj_positions",
         XC.cached_column(

@@ -29,17 +29,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from .. import constants as C
 from .. import optim as OPT
 from .. import weights as W
 from ..config import ModelConfig
 from ..kernel_grad import apply_bn_updates, loss_and_grads
-from .inference import tokens_to_word_ids
-
-FEATURE_COLS = (
-    "word_ids", "masked_tokens", "pos_ids", "ner_ids",
-    "subj_positions", "obj_positions",
-)
+from .inference import as_dtype, length_groups
 
 _OUT_SCHEMA = "n long, loss_sum double, weight_sum double, blob binary"
 
@@ -61,16 +55,10 @@ def gradient_rows(
     (the reference trains fp32 torch) — half the GEMM and blob traffic;
     fp64 stays the default because the finite-difference gradient gate
     and the distributed==local parity pin exactness there."""
-    has_word_ids = "word_ids" in features.columns
-    np_dtype = np.dtype(dtype)
     cw = None if class_weights is None else np.asarray(class_weights, dtype=np.float64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        params = {
-            k: np.asarray(v, dtype=np_dtype)
-            if np.issubdtype(np.asarray(v).dtype, np.floating) else v
-            for k, v in params_bc.value.items()
-        }
+        params = as_dtype(params_bc.value, dtype)
         vocab = vocab_bc.value if vocab_bc is not None else None
         total: dict | None = None
         bn_acc: dict = {}
@@ -80,22 +68,9 @@ def gradient_rows(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if not has_word_ids:
-                pdf = pdf.assign(
-                    word_ids=tokens_to_word_ids(pdf["masked_tokens"], vocab)
-                )
-            lengths = pdf["word_ids"].map(len).to_numpy()
-            for l in np.unique(lengths):
-                if l == 0 or l > C.ABS_MAX_LEN:
-                    continue
-                idx = np.nonzero(lengths == l)[0]
-                stack = lambda col: np.array(
-                    [np.asarray(x, dtype=np.int64) for x in pdf[col].iloc[idx]]
-                )
+            for idx, *stacks in length_groups(pdf, vocab):
                 ls, ws, grads, bn_up = loss_and_grads(
-                    params, cfg,
-                    stack("word_ids"), stack("pos_ids"), stack("ner_ids"),
-                    stack("subj_positions"), stack("obj_positions"),
+                    params, cfg, *stacks,
                     pdf[label_col].iloc[idx].to_numpy(dtype=np.int64),
                     class_weights=cw, bn_mode=bn_mode, word_topn=word_topn,
                 )
@@ -355,16 +330,10 @@ def local_sgd_rows(
         raise ValueError(
             f"local SGD needs k >= 1 local steps per sync, got k={k!r}"
         )
-    has_word_ids = "word_ids" in features.columns
-    np_dtype = np.dtype(dtype)
     cw = None if class_weights is None else np.asarray(class_weights, dtype=np.float64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        params = {
-            key: np.asarray(v, dtype=np_dtype)
-            if np.issubdtype(np.asarray(v).dtype, np.floating) else v
-            for key, v in params_bc.value.items()
-        }
+        params = as_dtype(params_bc.value, dtype)
         vocab = vocab_bc.value if vocab_bc is not None else None
         # materialize the partition's batches once; k passes reuse them
         groups: list[tuple] = []
@@ -372,23 +341,10 @@ def local_sgd_rows(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if not has_word_ids:
-                pdf = pdf.assign(
-                    word_ids=tokens_to_word_ids(pdf["masked_tokens"], vocab)
+            for idx, *stacks in length_groups(pdf, vocab):
+                groups.append(
+                    (*stacks, pdf[label_col].iloc[idx].to_numpy(dtype=np.int64))
                 )
-            lengths = pdf["word_ids"].map(len).to_numpy()
-            for l in np.unique(lengths):
-                if l == 0 or l > C.ABS_MAX_LEN:
-                    continue
-                idx = np.nonzero(lengths == l)[0]
-                stack = lambda col: np.array(
-                    [np.asarray(x, dtype=np.int64) for x in pdf[col].iloc[idx]]
-                )
-                groups.append((
-                    stack("word_ids"), stack("pos_ids"), stack("ner_ids"),
-                    stack("subj_positions"), stack("obj_positions"),
-                    pdf[label_col].iloc[idx].to_numpy(dtype=np.int64),
-                ))
                 n += len(idx)
         if not groups:
             return

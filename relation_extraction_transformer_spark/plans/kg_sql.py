@@ -186,8 +186,7 @@ def _kg_candidates_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import pipeline as PL
 
     pages = spark.read.parquet(PAGES_PARQUET)
-    arts = PL.build_artifacts(spark)
-    return PL.candidates_plan(pages, arts).select(
+    return PL.candidates_plan(pages).select(
         "url", "sent_id", "pair_id", "subj_surface", "subj_type",
         "obj_surface", "obj_type",
     )

@@ -40,69 +40,91 @@ class PipelineArtifacts:
 
     params_bc: object
     vocab_bc: object
-    gaz: DataFrame
 
 
-_ARTIFACT_CACHE: dict[int, PipelineArtifacts] = {}
+#: keyed by (session, frozen ModelConfig, inference dtype): every model
+#: field shapes the generated weights, so all of them are in the key
+_ARTIFACT_CACHE: dict[tuple, PipelineArtifacts] = {}
 
 
 def build_artifacts(
     spark: SparkSession, cfg: PipelineConfig = DEFAULT_PIPELINE
 ) -> PipelineArtifacts:
-    key = id(spark) ^ hash(
-        (cfg.model.seed, cfg.model.vocab_size, cfg.inference_dtype)
-    )
+    key = (spark, cfg.model, cfg.inference_dtype)
     if key not in _ARTIFACT_CACHE:
-        from ..operators.inference import as_dtype
-
         vocab = G.static_vocab()
-        params = as_dtype(
+        params = INF.as_dtype(
             W.generate_weights(cfg.model, vocab_size=len(vocab)),
             cfg.inference_dtype,
         )
         _ARTIFACT_CACHE[key] = PipelineArtifacts(
             params_bc=spark.sparkContext.broadcast(params),
             vocab_bc=spark.sparkContext.broadcast(vocab),
-            gaz=NER.gazetteer_df(spark),
         )
     return _ARTIFACT_CACHE[key]
 
 
-def candidates_plan(
-    pages: DataFrame, arts: PipelineArtifacts, cfg: PipelineConfig = DEFAULT_PIPELINE
-) -> DataFrame:
-    """pages -> preprocessed candidate features (no inference yet)."""
-    extracted = PAGES.extract_text(pages).filter(F.col("lang") == "en")
-    sentences = NER.split_sentences(extracted, text_col="extracted_text")
-    tokenized = NER.tokenize(sentences)
+def _english_text(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    return PAGES.extract_text(pages).filter(F.col("lang") == "en")
+
+
+def _sentences(extracted: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    return NER.tokenize(NER.split_sentences(extracted, text_col="extracted_text"))
+
+
+def _tagged(tokenized: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # small closed-world dictionary -> shuffle-free inline NER; the
-    # broadcast-join path (detect_mentions_join) covers big dictionaries
-    kept = NER.detect_mentions(tokenized)
-    tagged = NER.ner_tags_from_mentions(kept)
-    # per-sentence tag ids BEFORE the pair explode (computed once per
-    # sentence instead of once per candidate)
-    tagged = PRE.attach_tag_ids(tagged)
+    # broadcast-join path (detect_mentions_join) covers big dictionaries.
+    # Tag ids are attached per sentence, BEFORE the pair explode, so they
+    # are computed once per sentence instead of once per candidate.
+    return PRE.attach_tag_ids(
+        NER.ner_tags_from_mentions(NER.detect_mentions(tokenized))
+    )
+
+
+def _candidates(tagged: DataFrame, cfg: PipelineConfig) -> DataFrame:
     pairs = CAND.generate_pairs(tagged, cfg.max_pairs_per_sentence)
     return PRE.preprocess_candidates(pairs, lower=cfg.model.lower)
 
 
-def triples_plan(
-    pages: DataFrame,
+#: the candidate stage graph, in order: (name, stage(df, cfg) -> df).
+#: candidates_plan and lineage.observed_pipeline_metrics both fold over it.
+CANDIDATE_STAGES = (
+    ("pages_en", _english_text),
+    ("sentences", _sentences),
+    ("tagged_sentences", _tagged),
+    ("candidates", _candidates),
+)
+
+#: the candidate columns inference needs: triple keys, surfaces and features
+SLIM_COLS = (
+    "url", "sent_id", "pair_id", "subj_surface", "subj_type",
+    "obj_surface", "obj_type",
+    "masked_tokens", "pos_ids", "ner_ids", "subj_positions",
+    "obj_positions",
+)
+
+
+def candidates_plan(
+    pages: DataFrame, cfg: PipelineConfig = DEFAULT_PIPELINE
+) -> DataFrame:
+    """pages -> preprocessed candidate features (no inference yet)."""
+    for _, stage in CANDIDATE_STAGES:
+        pages = stage(pages, cfg)
+    return pages
+
+
+def predict_triples(
+    feats: DataFrame,
     spark: SparkSession,
     cfg: PipelineConfig = DEFAULT_PIPELINE,
     keep_probs: bool = True,
 ) -> DataFrame:
+    """candidate features -> (subj, pred, obj) triples."""
     arts = build_artifacts(spark, cfg)
-    feats = candidates_plan(pages, arts, cfg)
-    slim = feats.select(
-        "url", "sent_id", "pair_id", "subj_surface", "subj_type",
-        "obj_surface", "obj_type",
-        "masked_tokens", "pos_ids", "ner_ids", "subj_positions",
-        "obj_positions",
-    )
     predicted = INF.predict_relations(
-        slim, arts.params_bc, cfg.model, vocab_bc=arts.vocab_bc,
-        keep_probs=keep_probs,
+        feats.select(*SLIM_COLS), arts.params_bc, cfg.model,
+        vocab_bc=arts.vocab_bc, keep_probs=keep_probs,
     )
     triples = INF.triples_from_predictions(predicted)
     cols = [
@@ -115,3 +137,12 @@ def triples_plan(
     if keep_probs:
         cols.append(F.col("probs"))
     return triples.select(*cols)
+
+
+def triples_plan(
+    pages: DataFrame,
+    spark: SparkSession,
+    cfg: PipelineConfig = DEFAULT_PIPELINE,
+    keep_probs: bool = True,
+) -> DataFrame:
+    return predict_triples(candidates_plan(pages, cfg), spark, cfg, keep_probs)

@@ -5,7 +5,7 @@ incremental forms of the same computations for continuously crawled pages:
 
 - ``streaming_triples``: readStream over a pages directory -> the SAME
   candidate/inference plan (the plan is stream-batch agnostic because it
-  is narrow until the inference UDF, which is stateless per row),
+  is narrow until the inference UDF, which keeps no state across batches),
 - ``windowed_event_counts``: watermarked tumbling-window aggregation over
   an events stream (late data bounded by the watermark),
 - sinks via ``foreachBatch`` so each micro-batch reuses the resumable

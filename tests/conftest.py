@@ -1,10 +1,12 @@
 import os
 
-import pytest
-from pyspark.sql import SparkSession
-
+# before pyspark imports NumPy: BLAS reads its thread count once, so the
+# driver then runs the same one-thread GEMMs as the Python workers
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
+
+import pytest  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
 
 @pytest.fixture(scope="session")

@@ -4,8 +4,10 @@ import shutil
 
 import pyspark.sql.functions as F
 
+from relation_extraction_transformer_spark.config import DEFAULT_PIPELINE
 from relation_extraction_transformer_spark.operators import multimodal as MM
 from relation_extraction_transformer_spark.plans import lineage as LIN
+from relation_extraction_transformer_spark.plans import pipeline as PL
 from relation_extraction_transformer_spark.sources import pages as PG
 from relation_extraction_transformer_spark.streaming import stream as ST
 
@@ -53,6 +55,20 @@ def test_observed_metrics(spark):
     assert m["sentences"] > 0
     assert m["candidates"] > 0
     assert 0 < m["triples"] <= m["candidates"]
+
+
+def test_observed_metrics_equal_stage_prefix_counts(spark):
+    # each observed count is the row count of the stage prefix the
+    # shipped plan runs, and the triples count is the shipped plan's
+    pages = PG.synthetic_pages(spark, 30, seed=9, partitions=3)
+    m = LIN.observed_pipeline_metrics(spark, pages)
+    assert set(m) == {"pages", "triples"} | {n for n, _ in PL.CANDIDATE_STAGES}
+    assert m["pages"] == pages.count()
+    df = pages
+    for name, stage in PL.CANDIDATE_STAGES:
+        df = stage(df, DEFAULT_PIPELINE)
+        assert m[name] == df.count(), name
+    assert m["triples"] == PL.triples_plan(pages, spark, keep_probs=False).count()
 
 
 def test_streaming_windowed_counts(spark, tmp_path):

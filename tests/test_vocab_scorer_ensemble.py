@@ -143,8 +143,7 @@ def test_scorer_guessed_zero_precision_one(spark):
 
 def test_ensemble_vote_and_agreement(spark):
     pages = PG.synthetic_pages(spark, 20, seed=21, partitions=2)
-    arts = PL.build_artifacts(spark)
-    feats = PL.candidates_plan(pages, arts).select(
+    feats = PL.candidates_plan(pages).select(
         "url", "sent_id", "pair_id", "masked_tokens", "pos_ids", "ner_ids",
         "subj_positions", "obj_positions",
     )
