@@ -283,8 +283,10 @@ def band_candidate_pairs(
     whole dedup path — runs ONCE instead of once per join side (round 2
     computed it twice here and a third time in the Jaccard verify stage).
     Spark's cache manager is plan-keyed, so repeated calls over the same
-    input reuse one entry, and downstream consumers of the same bands plan
-    (the Jaccard verify join) hit the cache too.  MEMORY_AND_DISK: band
+    input reuse one entry, as does any later query over the same bands
+    plan.  The Jaccard verify stage (``canonicalize.verify_pairs_jaccard``)
+    reads the names, not the bands, so it gains nothing from the cache;
+    materialize the names once upstream instead.  MEMORY_AND_DISK: band
     rows are 2 small rows/doc — at true 100 TB scale a pipeline would
     materialize them to a table instead, which is the same idea durable.
 

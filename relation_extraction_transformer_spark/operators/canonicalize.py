@@ -42,9 +42,15 @@ def minhash_band_hashes(
     return MH.minhash_bands(df, "node_id", shingles, k=k, bands=bands)
 
 
-def candidate_pairs(bands_df: DataFrame) -> DataFrame:
-    """Self-join on (band, band_hash): src < dst, distinct."""
-    return MH.band_candidate_pairs(bands_df, "node_id", "src", "dst")
+def candidate_pairs(
+    bands_df: DataFrame, persisted_out: list | None = None
+) -> DataFrame:
+    """Self-join on (band, band_hash): src < dst, distinct.  The band
+    rows are persisted; ``persisted_out`` receives the handle to release
+    (see :func:`functions.minhash.band_candidate_pairs`)."""
+    return MH.band_candidate_pairs(
+        bands_df, "node_id", "src", "dst", persisted_out=persisted_out
+    )
 
 
 def verify_pairs_jaccard(
@@ -101,18 +107,21 @@ def connected_components(
 
     # Convergence detection via the label-sum invariant (r8): min-label
     # propagation is MONOTONE (a node's label never increases), so for
-    # NUMERIC node ids the label multiset changed this round iff its
+    # INTEGRAL node ids the label multiset changed this round iff its
     # exact DECIMAL sum strictly decreased.  One trivial aggregation job
     # per round on the already-checkpointed labels replaces the previous
     # join + limit(1) count job, and the propagate + shortcut pair
     # materializes ONCE per round instead of twice (round walls in
-    # OPTIMIZATION_r08.md).  String-labeled graphs (kg_wcc over entity
-    # names) have no monotone numeric image, so they keep the join-based
-    # changed check against the previous round's checkpointed labels.
-    from pyspark.sql.types import NumericType
+    # OPTIMIZATION_r08.md).  The sum is exact only for integral ids: a
+    # bigint fits decimal(38,0) with room for 10^19 rows, while
+    # fractional ids round together under the cast and wide decimals
+    # overflow it.  Every other type (string-labeled kg_wcc over entity
+    # names, double, decimal) keeps the join-based changed check against
+    # the previous round's checkpointed labels.
+    from pyspark.sql.types import IntegralType
 
-    numeric_ids = isinstance(
-        labels.schema["component"].dataType, NumericType
+    integral_ids = isinstance(
+        labels.schema["component"].dataType, IntegralType
     )
 
     def label_sum(df: DataFrame):
@@ -120,7 +129,7 @@ def connected_components(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
         ).collect()[0][0]
 
-    prev_sum = label_sum(labels) if numeric_ids else None
+    prev_sum = label_sum(labels) if integral_ids else None
     for _ in range(max_iter):
         # each node proposes its current label to every neighbor
         msgs = (
@@ -149,7 +158,7 @@ def connected_components(
             )
             .localCheckpoint(eager=True)
         )
-        if numeric_ids:
+        if integral_ids:
             labels = shortcut
             cur_sum = label_sum(labels)
             if cur_sum == prev_sum:

@@ -10,6 +10,15 @@ Completes the north-rule pipeline after triple extraction:
 
 Written back as parquet here (Iceberg in production — identical DataFrame
 code path; the sandbox has no Iceberg jars).
+
+:func:`build_graph` materializes two intermediates once, with
+``localCheckpoint(eager=True)``: the linked triples (pruned to the columns
+the graph reads) and the raw node table (``node_id``, ``name``,
+``mention_count`` and the normalized name).  Both feed several separate
+Spark queries — the checkpointed rounds of connected components, the
+nodes write and the edges write — and Spark reuses work only inside one
+query, so left lazy each query would scan the triples, link them and
+aggregate the nodes again.
 """
 
 from __future__ import annotations
@@ -32,7 +41,14 @@ def build_graph(
             "subj_type", F.lit(None).cast("string")
         ).withColumn("obj_type", F.lit(None).cast("string"))
     dictionary = LINK.entity_dictionary(spark)
-    linked = LINK.link_triples(triples, dictionary)
+    linked = (
+        LINK.link_triples(triples, dictionary)
+        .select(
+            "subj_entity_id", "subj_canonical", "obj_entity_id",
+            "obj_canonical", "pred", "prob", "url",
+        )
+        .localCheckpoint(eager=True)
+    )
 
     # raw entity nodes from both endpoints
     ends = linked.select(
@@ -44,22 +60,26 @@ def build_graph(
             F.col("obj_canonical").alias("name"),
         )
     )
-    raw_nodes = ends.groupBy("node_id").agg(
-        F.min("name").alias("name"), F.count(F.lit(1)).alias("mention_count")
+    raw_nodes = (
+        ends.groupBy("node_id")
+        .agg(F.min("name").alias("name"), F.count(F.lit(1)).alias("mention_count"))
+        .withColumn("norm_name", LINK.normalize_surface(F.col("name")))
+        .localCheckpoint(eager=True)
     )
 
     # canonicalization: LSH blocking -> exact verify -> components
-    bands = CANON.minhash_band_hashes(
-        raw_nodes.select("node_id", LINK.normalize_surface(F.col("name")).alias("name")),
-        "name",
+    names = raw_nodes.select("node_id", F.col("norm_name").alias("name"))
+    band_cache: list = []
+    cand = CANON.candidate_pairs(
+        CANON.minhash_band_hashes(names, "name"), persisted_out=band_cache
     )
-    cand = CANON.candidate_pairs(bands)
     verified = CANON.verify_pairs_jaccard(
-        cand,
-        raw_nodes.select("node_id", LINK.normalize_surface(F.col("name")).alias("name")),
-        threshold=jaccard_threshold,
+        cand, names, threshold=jaccard_threshold
     )
     comps = CANON.connected_components(verified)
+    # components read only their own checkpoints from here on
+    for bands in band_cache:
+        bands.unpersist()
 
     canon_map = raw_nodes.join(comps, "node_id", "left").select(
         "node_id",

@@ -1,10 +1,14 @@
 """Entity linking, canonicalization, and graph materialization tests."""
 
+from decimal import Decimal
+
 import pyspark.sql.functions as F
+import pytest
 
 from relation_extraction_transformer_spark.operators import canonicalize as CANON
 from relation_extraction_transformer_spark.operators import linking as LINK
 from relation_extraction_transformer_spark.plans import graph as GRAPH
+from relation_extraction_transformer_spark.plans import kg_sql as KG
 from relation_extraction_transformer_spark.plans import pipeline as PL
 from relation_extraction_transformer_spark.sources import pages as PG
 
@@ -29,6 +33,29 @@ def test_connected_components_long_chain(spark):
     comps = CANON.connected_components(edges)
     assert comps.select("component").distinct().count() == 1
     assert comps.agg(F.min("component")).first()[0] == 0
+
+
+@pytest.mark.parametrize(
+    "ddl, ids",
+    [
+        # fractional ids all round to 1 under a decimal(38,0) cast
+        ("double", [1 + i / 100 for i in range(1, 41)]),
+        # nine ids near 4e37 overflow a decimal(38,0) sum
+        ("decimal(38,0)", [Decimal(4 * 10**37 + i) for i in range(9)]),
+    ],
+)
+def test_connected_components_non_integral_ids(spark, ddl, ids):
+    """A path over non-integral ids converges to one component labelled
+    with its minimum id: the label-sum convergence check is exact only
+    for integral ids, so these take the join-based check."""
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), f"src: {ddl}, dst: {ddl}"
+    )
+    got = {
+        r.node_id: r.component
+        for r in CANON.connected_components(edges).collect()
+    }
+    assert got == {i: ids[0] for i in ids}
 
 
 def test_linking_best_candidate(spark):
@@ -118,6 +145,29 @@ def test_build_graph_end_to_end(spark):
         assert r.src in node_ids and r.dst in node_ids
     # weights aggregate multiple evidence rows
     assert edges.agg(F.max("weight")).first()[0] >= 1
+
+
+def test_build_graph_reads_triples_once(spark, tmp_path):
+    """The linked triples and the node table are materialized inside
+    build_graph: the plans of the returned frames read only those
+    checkpoints, never the triples' source again."""
+    path = str(tmp_path / "triples")
+    spark.read.parquet(KG.TRIPLES_PARQUET).write.parquet(path)
+    nodes, edges = GRAPH.build_graph(spark.read.parquet(path), spark)
+    for df in (nodes, edges):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan and path not in plan, plan
+
+
+def test_build_graph_releases_band_cache(spark, tmp_path):
+    """build_graph persists the LSH band rows for its self-join and must
+    release them: a long-lived session would otherwise pin one cache
+    entry per call."""
+    spark.catalog.clearCache()
+    triples = spark.read.parquet(KG.TRIPLES_PARQUET)
+    nodes, edges = GRAPH.build_graph(triples, spark)
+    GRAPH.write_graph(nodes, edges, str(tmp_path))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_linking_dictionary_reduction_preserves_argmin(spark):
